@@ -1024,12 +1024,14 @@ object SparkEntry {
       // centroids are the fixture (k-means is the one non-SQL stage);
       // nearest-centroid assignment, nprobe probing, candidate join, and
       // the top-k ranking are all re-derived independently here. Cosine
-      // ties break by lower cluster / neighbor id on both sides.
+      // ties break by lower cluster / neighbor id on both sides; the
+      // centroid sim is rounded to 9 places as Ivf.quantize does, so
+      // parallel centroids tie exactly instead of by last-ulp noise.
       s"""WITH cents AS (SELECT cluster, centroid
          |  FROM read_parquet('$FixturesDir/ivf_centroids/*.parquet')),
          |sims AS (SELECT e.vec_id, c.cluster,
-         |    list_cosine_similarity(CAST(e.embedding AS DOUBLE[]),
-         |                           CAST(c.centroid AS DOUBLE[])) AS sim
+         |    round(list_cosine_similarity(CAST(e.embedding AS DOUBLE[]),
+         |                                 CAST(c.centroid AS DOUBLE[])), 9) AS sim
          |  FROM embeddings e, cents c),
          |asg AS (SELECT vec_id AS neighbor_id, cluster FROM (
          |    SELECT vec_id, cluster,

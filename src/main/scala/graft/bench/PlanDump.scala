@@ -27,7 +27,7 @@ object PlanDump {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    val outDir = java.nio.file.Paths.get("plans", "r06")
+    val outDir = java.nio.file.Paths.get("plans", tag)
     java.nio.file.Files.createDirectories(outDir)
     graft.SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (name, _) => only.forall(_.contains(name)) }

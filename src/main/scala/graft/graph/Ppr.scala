@@ -22,6 +22,7 @@ import org.apache.spark.sql.functions._
   * Dataflow per iteration: ranks ⋈ edges (shuffle on src) →
   * groupBy(dst).sum → join personalization → convergence check via a
   * single agg. `localCheckpoint` truncates lineage every iteration.
+  * [[runLocal]] is the same loop over driver-resident CSR arrays.
   */
 object Ppr {
 
@@ -129,6 +130,77 @@ object Ppr {
       runAdj(adj0, seeds, damping, tol, maxIter, minScore,
         rowsHint = Some(totalRows))
     }
+  }
+
+  /** Local-array twin of [[runAdj]] for a graph held in driver arrays
+    * (the serving path of a snapshot under the driver cap — what the
+    * reference's Memgraph backend does client-side). Same semantics:
+    * node set = adjacency sources ∪ seeds, personalization = seed weight /
+    * Σ weights (uniform over the node set when Σ ≤ 0), blocks of 5
+    * iterations with the Σ|Δ| check after each block (skipped when
+    * tol ≤ 0), ranks ≤ `minScore` dropped. Only the summation order
+    * differs from the DataFrame loop.
+    *
+    * @param offsets CSR row offsets over node indices (length n + 1)
+    * @param targets CSR entry targets
+    * @param p       normalized weight per entry (w / Σ out-w of its source)
+    * @param seeds   seed node indices (distinct), with `weights` aligned
+    * @return the kept (node index, rank) pairs, ascending node index
+    */
+  def runLocal(
+      offsets: Array[Int],
+      targets: Array[Int],
+      p: Array[Double],
+      seeds: Array[Int],
+      weights: Array[Double],
+      damping: Double = 0.85,
+      tol: Double = 1e-6,
+      maxIter: Int = 100,
+      minScore: Double = 1e-8
+  ): Array[(Int, Double)] = {
+    val n = offsets.length - 1
+    val inSet = Array.tabulate(n)(v => offsets(v + 1) > offsets(v))
+    seeds.foreach(inSet(_) = true)
+    val pers = new Array[Double](n)
+    val totalSeed = weights.sum
+    if (totalSeed <= 0.0) {
+      val size = inSet.count(identity)
+      for (v <- 0 until n if inSet(v)) pers(v) = 1.0 / size
+    } else
+      for (i <- seeds.indices) pers(seeds(i)) = weights(i) / totalSeed
+
+    def step(ranks: Array[Double]): Array[Double] = {
+      val inflow = new Array[Double](n)
+      var u = 0
+      while (u < n) {
+        val r = ranks(u)
+        var e = offsets(u)
+        while (e < offsets(u + 1)) { inflow(targets(e)) += r * p(e); e += 1 }
+        u += 1
+      }
+      val next = new Array[Double](n)
+      for (v <- 0 until n if inSet(v))
+        next(v) = damping * inflow(v) + (1.0 - damping) * pers(v)
+      next
+    }
+
+    val blockSize = 5 // runAdj's block: one convergence check per 5 steps
+    var ranks = pers
+    var iter = 0
+    var delta = Double.MaxValue
+    while (delta > tol && iter < maxIter) {
+      val steps = math.min(blockSize, maxIter - iter)
+      var next = ranks
+      for (_ <- 0 until steps) next = step(next)
+      if (tol > 0.0) {
+        delta = 0.0
+        for (v <- 0 until n if inSet(v)) delta += math.abs(next(v) - ranks(v))
+      }
+      ranks = next
+      iter += steps
+    }
+    (0 until n).iterator.filter(v => inSet(v) && ranks(v) > minScore)
+      .map(v => (v, ranks(v))).toArray
   }
 
   private def runAdj(

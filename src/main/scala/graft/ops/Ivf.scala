@@ -34,8 +34,9 @@ import org.apache.spark.sql.functions._
   * associative, order-independent — so training yields bit-identical
   * centroids at ANY partitioning/parallelism; init is the k lowest-id
   * vectors (no RNG). Assignment/probing rank by sequential-double
-  * cosine with ties broken by lower cluster id, the same discipline the
-  * DuckDB oracle re-derives from the dumped centroid fixture.
+  * cosine rounded to 9 places ([[quantize]]) with ties broken by lower
+  * cluster id, the same discipline the DuckDB oracle re-derives from the
+  * dumped centroid fixture.
   */
 object Ivf {
 
@@ -45,17 +46,21 @@ object Ivf {
     */
   private val FixedScale = (1L << 20).toDouble
 
-  private def cos(v: Seq[Float], c: Array[Float]): Double = {
-    if (v == null || v.isEmpty || v.length != c.length) return 0.0
-    var dot = 0.0; var na = 0.0; var nb = 0.0; var i = 0
-    val n = c.length
-    while (i < n) {
-      val x = v(i).toDouble; val y = c(i).toDouble
-      dot += x * y; na += x * x; nb += y * y
-      i += 1
-    }
-    if (na == 0.0 || nb == 0.0) 0.0 else dot / math.sqrt(na * nb)
+  /** Round a ranking cosine to 9 decimal places, half away from zero —
+    * DuckDB's `round(x, 9)` (`std::round(x · 10⁹) / 10⁹`). Parallel
+    * centroids such as (5,-5) and (3,-3) have mathematically equal
+    * cosines that differ in the last ulp depending on how the norms are
+    * formed; rounding makes them an exact tie, broken by cluster id. The
+    * q48 oracle rounds its `sim` the same way.
+    */
+  def quantize(c: Double): Double = {
+    val s = c * 1e9
+    // rounded as a Long so a tiny negative cosine becomes +0.0, not -0.0
+    (if (s < 0) -math.round(-s) else math.round(s)).toDouble / 1e9
   }
+
+  private def cos(v: Seq[Float], c: Array[Float]): Double =
+    quantize(Similarity.cosine(v, scala.collection.immutable.ArraySeq.unsafeWrapArray(c)))
 
   /** The `n` nearest centroids of `v`, by cosine desc then cluster id
     * asc (the tie-break the oracle mirrors with `ORDER BY sim DESC,

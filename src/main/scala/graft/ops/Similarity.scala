@@ -21,7 +21,13 @@ import org.apache.spark.sql.functions._
   */
 object Similarity {
 
-  val cosineUdf = udf { (a: Seq[Float], b: Seq[Float]) =>
+  /** Sequential-double cosine of two float vectors; 0.0 for a null,
+    * empty, zero-norm or dimension-mismatched pair. The one cosine
+    * formula: the UDF below and every driver-side caller (the service's
+    * in-process retrieval, `Ivf`) share it, so their scores are
+    * bit-identical.
+    */
+  def cosine(a: Seq[Float], b: Seq[Float]): Double =
     if (a == null || b == null || a.isEmpty || a.length != b.length) 0.0
     else {
       var dot = 0.0; var na = 0.0; var nb = 0.0; var i = 0
@@ -33,7 +39,8 @@ object Similarity {
       }
       if (na == 0.0 || nb == 0.0) 0.0 else dot / math.sqrt(na * nb)
     }
-  }
+
+  val cosineUdf = udf((a: Seq[Float], b: Seq[Float]) => cosine(a, b))
 
   /** Brute-force cosine top-k: for each query row, the k nearest corpus
     * rows (excluding itself). Queries are broadcast — the corpus is

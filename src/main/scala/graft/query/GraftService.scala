@@ -2,8 +2,9 @@ package graft.query
 
 import graft.projectors.Projectors
 import graft.store.SnapshotStore
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 /** The in-process service facade over a committed warehouse — the
   * orchestration surface of the reference's QortexService (service.py):
@@ -13,9 +14,23 @@ import org.apache.spark.sql.functions._
   * user's call pattern maps 1:1; only the transport (their MCP/REST
   * wrappers) is out of scope.
   *
-  * The committed tables are read once per service instance and
-  * plan-truncated (`localCheckpoint`) so every query plans against leaves
-  * — the "query service checkpoints its graph across queries" shape.
+  * `query` has two paths, chosen once per service by the size of the
+  * committed snapshot:
+  *  - '''driver-resident''' when each of `concepts`, `edges` and `rules`
+  *    holds at most `Causal.MaxDriverGraph` rows (the reference's
+  *    in-process graph bound): the tables are collected once into a
+  *    [[SnapshotGraph]] — sorted concept arrays with an embedding matrix,
+  *    a CSR adjacency, a concept → rules index — and every query runs all
+  *    six retrieval steps in process, as the reference's Memgraph backend
+  *    does client-side. A warm query launches no Spark job (one small
+  *    collect after a commit to `factors`), takes no `Loops` lock and
+  *    caches nothing; its items and rules are local relations.
+  *  - '''Spark''' when any table is over the cap: `Retrieval.retrieveFull`
+  *    over the plan-truncated (`localCheckpoint`) tables, with the PPR
+  *    adjacency prepared once per service.
+  *
+  * Both paths return the same items and rules. Explore, feedback, stats
+  * and projection always run on the checkpointed tables.
   */
 final class GraftService(store: SnapshotStore)(implicit spark: SparkSession) {
   import spark.implicits._
@@ -24,18 +39,52 @@ final class GraftService(store: SnapshotStore)(implicit spark: SparkSession) {
   private lazy val edges: DataFrame = store.read("edges").localCheckpoint()
   private lazy val rules: DataFrame = store.read("rules").localCheckpoint()
 
-  /** The normalized PPR adjacency, prepared ONCE per service instance
-    * (= per committed snapshot — the tables above are snapshot-pinned the
-    * same way). Every query's retrieval reuses it; only that query's
-    * ephemeral online edges pay new normalization work. Feedback updates
-    * factors, never edges, so no invalidation is needed mid-instance.
+  /** The Spark path's normalized PPR adjacency, prepared ONCE per service
+    * instance (= per committed snapshot — the tables above are
+    * snapshot-pinned the same way). Every query's retrieval reuses it;
+    * only that query's ephemeral online edges pay new normalization work.
+    * Feedback updates factors, never edges, so no invalidation is needed
+    * mid-instance.
     */
   private[query] lazy val pprGraph: graft.graph.Ppr.PreparedGraph =
     graft.graph.Ppr.prepare(edges)
 
+  /** The driver-resident snapshot; None when a table is over the cap. */
+  private[graft] lazy val snapshot: Option[SnapshotGraph] =
+    SnapshotGraph.load(store.read("concepts"), store.read("edges"), store.read("rules"),
+      graft.causal.Causal.MaxDriverGraph)
+
   private def factors: DataFrame =
     if (store.exists("factors")) store.read("factors")
     else Seq.empty[(String, Double)].toDF("node_id", "factor")
+
+  /** The driver-resident path's `factors` as (snapshot id, table; None
+    * when over the cap). Recollected only when the latest snapshot id
+    * moves — any writer's commit moves it, and reading it is a file read,
+    * not a Spark job.
+    */
+  private val factorCache =
+    new java.util.concurrent.atomic.AtomicReference[(Long, Option[Map[String, Double]])](
+      (-1L, Some(Map.empty)))
+
+  private def factorsFor(seedIds: Seq[String]): Map[String, Double] = {
+    val latest = store.latest("factors").map(_.id).getOrElse(-1L)
+    def pinned = store.read("factors", latest, Some(GraftService.FactorSchema))
+    def asMap(rows: Array[Row]): Map[String, Double] =
+      rows.collect { case r if !r.isNullAt(0) && !r.isNullAt(1) => r.getString(0) -> r.getDouble(1) }
+        .toMap
+    val cached = factorCache.get()
+    val table =
+      if (cached._1 == latest) cached._2
+      else {
+        val t = SnapshotGraph.collectUnderCap(pinned, graft.causal.Causal.MaxDriverGraph)
+          .map(asMap)
+        factorCache.set((latest, t))
+        t
+      }
+    // an over-cap factors table is filtered to this query's seeds instead
+    table.getOrElse(asMap(pinned.filter(col("node_id").isin(seedIds: _*)).collect()))
+  }
 
   // service counters (service.py:439, 482-485)
   private val queryCounter = new java.util.concurrent.atomic.AtomicLong(0L)
@@ -64,6 +113,32 @@ final class GraftService(store: SnapshotStore)(implicit spark: SparkSession) {
   ): QueryResult = {
     val k = math.max(1, math.min(topK, 1000))
     val minConf = math.max(0.0, math.min(minConfidence, 1.0))
+    val (items, queryRules, kgCoverage) = snapshot match {
+      case Some(g) =>
+        val r = g.retrieve(context, domains, k, minConf, factorsFor)
+        (local(r.items, GraftService.ItemSchema), local(r.rules, GraftService.RuleSchema),
+          r.kgCoverage)
+      case None => querySpark(context, domains, k, minConf)
+    }
+    val n = queryCounter.incrementAndGet()
+    val qid = s"q$n-" + java.security.MessageDigest.getInstance("SHA-256")
+      .digest(context.getBytes("UTF-8")).take(4).map("%02x".format(_)).mkString
+    // query.completed + kg_coverage — the reference emits both per query
+    // (events.py QueryCompleted / KGCoverageComputed)
+    graft.observe.Observe.emit("query.completed",
+      "query_id" -> qid, "top_k" -> k,
+      "domains" -> domains, "kg_coverage" -> kgCoverage)
+    QueryResult(qid, items, queryRules, kgCoverage)
+  }
+
+  private def local(rows: Array[Row], schema: StructType): DataFrame =
+    spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
+
+  /** The Spark path of [[query]] for an already clamped `k` / `minConf`:
+    * (items, rules, KG coverage).
+    */
+  private[graft] def querySpark(context: String, domains: Seq[String], k: Int,
+      minConf: Double): (DataFrame, DataFrame, Double) = {
     val cs0 =
       if (domains.isEmpty) concepts
       else concepts.filter(substring_index(col("id"), ":", 1).isin(domains: _*))
@@ -76,15 +151,7 @@ final class GraftService(store: SnapshotStore)(implicit spark: SparkSession) {
     val items =
       if (domains.isEmpty) out.results
       else out.results.filter(substring_index(col("id"), ":", 1).isin(domains: _*))
-    val n = queryCounter.incrementAndGet()
-    val qid = s"q$n-" + java.security.MessageDigest.getInstance("SHA-256")
-      .digest(context.getBytes("UTF-8")).take(4).map("%02x".format(_)).mkString
-    // query.completed + kg_coverage — the reference emits both per query
-    // (events.py QueryCompleted / KGCoverageComputed)
-    graft.observe.Observe.emit("query.completed",
-      "query_id" -> qid, "top_k" -> k,
-      "domains" -> domains, "kg_coverage" -> out.kgCoverage)
-    QueryResult(qid, items, out.rules, out.kgCoverage)
+    (items, out.rules, out.kgCoverage)
   }
 
   /** The service's "credit" learner (service.py:1654:
@@ -196,4 +263,17 @@ final class GraftService(store: SnapshotStore)(implicit spark: SparkSession) {
   /** Write a projection artifact next to the warehouse (atomic). */
   def projectToFile(path: String, persona: String, projectedAt: String): Unit =
     Projectors.writeArtifact(path, project(persona, projectedAt = projectedAt))
+}
+
+object GraftService {
+  /** The teleportation-factor table `feedback` commits. */
+  private val FactorSchema = StructType(Seq(
+    StructField("node_id", StringType), StructField("factor", DoubleType)))
+  private val ItemSchema = StructType(Seq(
+    StructField("id", StringType), StructField("name", StringType),
+    StructField("vec_score", DoubleType), StructField("ppr", DoubleType),
+    StructField("combined", DoubleType)))
+  private val RuleSchema = StructType(Seq(
+    StructField("id", StringType), StructField("text", StringType),
+    StructField("category", StringType), StructField("relevance", DoubleType)))
 }

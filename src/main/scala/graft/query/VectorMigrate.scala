@@ -16,11 +16,10 @@ import org.apache.spark.sql.functions._
   * logger.info event names).
   *
   * Validation (the reference's per-batch shape checks, made global):
-  *  - every outgoing embedding shares ONE dimension (and matches
-  *    `expectDim` when given) — checked with a `limit(2)` distinct probe,
-  *    not a full aggregate;
-  *  - the transform preserves the id count (a re-embed must not drop or
-  *    duplicate vectors);
+  *  - no outgoing embedding is null, and every one shares ONE dimension
+  *    (matching `expectDim` when given);
+  *  - the transform preserves the id set: no re-keyed or duplicated id,
+  *    and no dropped vector (checked in that order);
   *  - post-write, every migrated id resolves in the destination
   *    (left-anti probe — the "vectors_written" accounting is verified,
   *    not assumed).
@@ -52,9 +51,8 @@ object VectorMigrate {
 
     // ONE aggregation job over the checkpointed frame answers every
     // validation probe: row count, the dimension range (min==max ⇔ one
-    // shared dimension — replaces the separate limit(2)-distinct scan),
-    // distinct-id count, and the re-key count. The checks below fire in
-    // the same order as before, so failure modes are unchanged.
+    // shared dimension), the null-embedding count, the distinct-id count
+    // and the re-key count.
     val stats = out
       .join(resolved.select(col("id"), lit(1).as("__src")), Seq("id"), "left")
       .agg(count(lit(1)).as("n"),
@@ -63,8 +61,14 @@ object VectorMigrate {
         countDistinct("id").as("d"),
         // coalesce: sum over an EMPTY out frame is null, not 0
         coalesce(sum(when(col("__src").isNull, 1L).otherwise(0L)), lit(0L))
-          .as("rk"))
+          .as("rk"),
+        // min/max(size) skip nulls, so a null embedding needs its own count
+        coalesce(sum(when(col("embedding").isNull, 1L).otherwise(0L)), lit(0L))
+          .as("nulls"))
       .collect().head
+    require(stats.getLong(5) == 0L,
+      s"vec.migrate: ${stats.getLong(5)} null embedding(s) — every migrated " +
+        "vector must carry an embedding")
     val (dmin, dmax) =
       (if (stats.isNullAt(1)) 0 else stats.getInt(1),
         if (stats.isNullAt(2)) 0 else stats.getInt(2))
@@ -74,14 +78,13 @@ object VectorMigrate {
     expectDim.foreach(e => require(stats.getLong(0) == 0L || dim == e,
       s"vec.migrate: embedding dimension $dim != expected $e"))
     val outCount = stats.getLong(0)
-    require(outCount == vectorsRead,
-      s"vec.migrate: transform changed the vector count " +
-        s"($vectorsRead read, $outCount after transform) — a migration " +
-        "must carry every vector; filter before migrating instead")
     // the documented contract is id-SET preservation, not just count:
     // a transform that collides two ids while keeping the row count
     // would otherwise pass every check (upsert dedups silently) and
-    // over-report vectorsWritten
+    // over-report vectorsWritten. Source ids are unique (read() keeps one
+    // row per id), so unique outgoing ids are checked BEFORE the count: a
+    // transform that duplicates rows is reported as duplicating ids, not
+    // as a count change to "filter before migrating" away.
     val (distinctIds, rekeyed) = (stats.getLong(3), stats.getLong(4))
     require(rekeyed == 0,
       s"vec.migrate: transform re-keyed $rekeyed id(s) not present in " +
@@ -90,6 +93,10 @@ object VectorMigrate {
       s"vec.migrate: transform produced duplicate ids " +
         s"($outCount rows, $distinctIds distinct) — the destination " +
         "upsert would silently collapse them")
+    require(outCount == vectorsRead,
+      s"vec.migrate: transform changed the vector count " +
+        s"($vectorsRead read, $outCount after transform) — a migration " +
+        "must carry every vector; filter before migrating instead")
 
     var written = 0L
     if (!dryRun) {

@@ -3,6 +3,7 @@ package graft.store
 import java.nio.charset.StandardCharsets
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Iceberg-style snapshot-committed tables over partitioned Parquet.
   *
@@ -230,16 +231,20 @@ final class SnapshotStore(val root: String)(implicit spark: SparkSession) {
   /** Time travel: read the table as of a retained snapshot id
     * (the distributed analog of the reference's checkpoint restore,
     * src/qortex/checkpoints/manager.py:11-35, core/memory.py:446-494).
+    * A known `schema` skips Parquet schema inference, which is a Spark
+    * job of its own.
     */
-  def read(table: String, snapshotId: Long): DataFrame = {
+  def read(table: String, snapshotId: Long, schema: Option[StructType] = None): DataFrame = {
     val snap = snapshot(table, snapshotId)
       .getOrElse(sys.error(s"no snapshot v$snapshotId for table $table"))
-    readSnapshot(table, snap)
+    readSnapshot(table, snap, schema)
   }
 
-  private def readSnapshot(table: String, snap: Snapshot): DataFrame = {
+  private def readSnapshot(table: String, snap: Snapshot,
+      schema: Option[StructType] = None): DataFrame = {
     val paths = snap.batches.map(b => new Path(dataDir(table), b).toString)
-    if (paths.isEmpty) spark.emptyDataFrame else spark.read.parquet(paths: _*)
+    if (paths.isEmpty) spark.emptyDataFrame
+    else schema.fold(spark.read)(spark.read.schema).parquet(paths: _*)
   }
 
   /** Roll the table back to snapshot `id` by committing a NEW snapshot with

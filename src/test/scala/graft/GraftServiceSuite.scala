@@ -126,4 +126,131 @@ class GraftServiceSuite extends SparkFunSuite {
     assert(rs.filter(col("provenance.derivation") === "derived")
       .filter(col("provenance.template_id").isNull).count() == 0)
   }
+
+  // ---- driver-resident query path ---------------------------------------
+
+  /** (text, domains, topK, minConfidence): head and tail entities, the
+    * known and an unknown domain, a confidence floor.
+    */
+  private val pathQueries = Seq(
+    ("platform access control tokens", Seq.empty[String], 5, 0.0),
+    (PagesGen.headEntities(0), Seq.empty[String], 10, 0.0),
+    (PagesGen.entities(3), Seq.empty[String], 20, 0.0),
+    (PagesGen.tailEntity(7L, 11L), Seq.empty[String], 10, 0.0),
+    (PagesGen.tailEntity(123L, 4L), Seq.empty[String], 3, 0.0),
+    (PagesGen.entities(5), Seq("web"), 10, 0.0),
+    ("platform access control tokens", Seq("nope"), 10, 0.0),
+    (PagesGen.headEntities(1), Seq.empty[String], 10, 0.8),
+    (PagesGen.entities(1) + " " + PagesGen.tailEntity(3L, 9L), Seq("web"), 15, 0.75))
+
+  /** The driver-resident result equals the Spark path's on the same
+    * service tables: same ids in the same order (a swap only between
+    * combined scores within 1e-12), scores within 1e-9, same rules,
+    * identical KG coverage.
+    */
+  private def assertPathsAgree(s: GraftService, text: String, domains: Seq[String],
+      topK: Int, minConf: Double): Unit = {
+    val local = s.query(text, domains, topK, minConf)
+    val (items, rules, coverage) = s.querySpark(text, domains, topK, minConf)
+    val what = s"'$text' domains=$domains k=$topK minConf=$minConf"
+    val (a, b) = (local.items.collect(), items.collect())
+    assert(a.map(_.getString(0)).toSet == b.map(_.getString(0)).toSet && a.length == b.length,
+      s"$what: ids ${a.map(_.getString(0)).toSeq} vs ${b.map(_.getString(0)).toSeq}")
+    a.zip(b).foreach { case (x, y) =>
+      assert(math.abs(x.getDouble(4) - y.getDouble(4)) <= 1e-12, s"$what: order $x vs $y")
+    }
+    val byId = b.map(r => r.getString(0) -> r).toMap
+    a.foreach { x =>
+      val y = byId(x.getString(0))
+      assert(x.getString(1) == y.getString(1), s"$what: name $x vs $y")
+      (2 to 4).foreach(c =>
+        assert(math.abs(x.getDouble(c) - y.getDouble(c)) <= 1e-9, s"$what: score $x vs $y"))
+    }
+    val (ra, rb) = (local.rules.collect(), rules.collect())
+    assert(ra.map(r => (r.getString(0), r.getString(1), r.getString(2))).toSeq ==
+      rb.map(r => (r.getString(0), r.getString(1), r.getString(2))).toSeq,
+      s"$what: rules ${ra.toSeq} vs ${rb.toSeq}")
+    ra.zip(rb).foreach { case (x, y) =>
+      assert(math.abs(x.getDouble(3) - y.getDouble(3)) <= 1e-9, s"$what: relevance $x vs $y")
+    }
+    assert(local.kgCoverage == coverage, s"$what: coverage")
+  }
+
+  test("driver-resident query equals the Spark retrieval path, before and after feedback") {
+    val s = new GraftService(store)(spark)
+    assert(s.snapshot.isDefined, "the test warehouse is under the driver cap")
+    pathQueries.foreach { case (t, d, k, c) => assertPathsAgree(s, t, d, k, c) }
+    // commit non-empty factors, then compare the queries they re-weight
+    val top = s.query(pathQueries.head._1, topK = 5).items.select("id").as[String].collect()
+    assert(s.feedback("q-eq", Map(top(0) -> "accepted", top(1) -> "rejected")).isRight)
+    assert(store.read("factors").count() > 0)
+    assertPathsAgree(s, pathQueries.head._1, Seq.empty, 5, 0.0)
+    assertPathsAgree(s, pathQueries(5)._1, Seq("web"), 10, 0.0)
+  }
+
+  test("warm driver-resident query launches no Spark job; at most one after feedback") {
+    val s = new GraftService(store)(spark)
+    val text = "platform access control tokens"
+    s.query(text, topK = 10).items.collect() // cold: loads the snapshot
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    def jobsOf(body: => Unit): Int = {
+      org.apache.spark.ListenerBusDrain(spark.sparkContext)
+      jobs.set(0)
+      body
+      org.apache.spark.ListenerBusDrain(spark.sparkContext)
+      jobs.get()
+    }
+    def queryAndCollect(): Array[org.apache.spark.sql.Row] = {
+      val r = s.query(text, topK = 10)
+      r.rules.collect()
+      r.items.collect()
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      var items = Array.empty[org.apache.spark.sql.Row]
+      assert(jobsOf { items = queryAndCollect() } == 0)
+      assert(jobsOf(queryAndCollect()) == 0)
+      assert(s.feedback("q-jobs", Map(items.head.getString(0) -> "accepted")).isRight)
+      assert(jobsOf(queryAndCollect()) <= 1) // recollects the new factors
+      assert(jobsOf(queryAndCollect()) == 0)
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  test("concurrent queries on one service return the sequential results") {
+    def rows(s: GraftService, q: (String, Seq[String], Int, Double)) = {
+      val r = s.query(q._1, q._2, q._3, q._4)
+      (r.items.collect().toSeq, r.rules.collect().toSeq, r.kgCoverage)
+    }
+    val sequential = {
+      val s = new GraftService(store)(spark)
+      pathQueries.map(rows(s, _))
+    }
+    val shared = new GraftService(store)(spark)
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(8)
+    try {
+      val futures = (0 until 8).map { t =>
+        pool.submit(new java.util.concurrent.Callable[Seq[Any]] {
+          def call(): Seq[Any] = {
+            val order = pathQueries.indices.map(i => (i + t) % pathQueries.length)
+            order.map(i => i -> rows(shared, pathQueries(i))).sortBy(_._1).map(_._2)
+          }
+        })
+      }
+      futures.foreach(f => assert(f.get() == sequential))
+    } finally pool.shutdown()
+  }
+
+  test("the driver cap selects the path: a table over the cap falls back to Spark") {
+    val (c, e, r) = (store.read("concepts"), store.read("edges"), store.read("rules"))
+    val n = Seq(c, e, r).map(_.count()).max.toInt
+    assert(graft.query.SnapshotGraph.load(c, e, r, cap = n).isDefined)
+    assert(graft.query.SnapshotGraph.load(c, e, r, cap = n - 1).isEmpty)
+    val small = (1 to 5).toDF("x")
+    assert(graft.query.SnapshotGraph.collectUnderCap(small, 5).map(_.length).contains(5))
+    assert(graft.query.SnapshotGraph.collectUnderCap(small, 4).isEmpty)
+  }
 }

@@ -87,12 +87,14 @@ class PropertySuite extends AnyFunSuite {
       val inRange = got.forall(i => i >= 0 && i < arr.length)
       val size = got.size == math.min(n, arr.length)
       // ranking invariant: successive picks never have strictly higher
-      // cosine later (ties broken by index)
+      // cosine later (ties broken by index). The independent cosine is
+      // rounded like the ranking's (Ivf.quantize), so equal cosines of
+      // parallel centroids compare equal here too.
       def cos(c: Array[Float]): Double = {
         val dot = q.zip(c).map { case (a, b) => a.toDouble * b }.sum
         val na = math.sqrt(q.map(x => x.toDouble * x).sum)
         val nb = math.sqrt(c.map(x => x.toDouble * x).sum)
-        if (na == 0 || nb == 0) 0.0 else dot / (na * nb)
+        graft.ops.Ivf.quantize(if (na == 0 || nb == 0) 0.0 else dot / (na * nb))
       }
       val ranked = got.sliding(2).forall {
         case Seq(a, b) => cos(arr(a)) > cos(arr(b)) ||

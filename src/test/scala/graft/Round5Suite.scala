@@ -492,6 +492,34 @@ class Round5Suite extends SparkFunSuite {
     assert(dst.count() == 0) // nothing written by either failed migration
   }
 
+  test("VectorMigrate rejects a null embedding") {
+    val wh = java.nio.file.Files.createTempDirectory("graft-migrate-null").toString
+    val store = new SnapshotStore(wh)
+    val src = new VectorIndex(store, "vi_src3")
+    val dst = new VectorIndex(store, "vi_dst3")
+    src.upsert(Seq(("a", vecOf(1)), ("b", null))
+      .toDF("id", "embedding")
+      .withColumn("embedding", col("embedding").cast("array<float>")))
+    val ex = intercept[IllegalArgumentException] { VectorMigrate.migrate(src, dst) }
+    assert(ex.getMessage.contains("1 null embedding"))
+    assert(dst.count() == 0)
+  }
+
+  test("VectorMigrate reports a row-duplicating transform as duplicate ids, not a count change") {
+    val wh = java.nio.file.Files.createTempDirectory("graft-migrate-dup2").toString
+    val store = new SnapshotStore(wh)
+    val src = new VectorIndex(store, "vi_src4")
+    val dst = new VectorIndex(store, "vi_dst4")
+    src.upsert(Seq(("a", vecOf(1)), ("b", vecOf(2)))
+      .toDF("id", "embedding")
+      .withColumn("embedding", col("embedding").cast("array<float>")))
+    val ex = intercept[IllegalArgumentException] {
+      VectorMigrate.migrate(src, dst, transform = df => df.union(df))
+    }
+    assert(ex.getMessage.contains("duplicate ids (4 rows, 2 distinct)"))
+    assert(dst.count() == 0)
+  }
+
   test("session messages sharing a 64-char prefix keep distinct vectors") {
     val wh = java.nio.file.Files.createTempDirectory("graft-sess-prefix").toString
     val si = new SessionIndex(new SnapshotStore(wh))
