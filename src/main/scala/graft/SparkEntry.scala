@@ -120,9 +120,9 @@ object SparkEntry {
     sfDir.foreach { dir =>
       val docs = t(spark, dir, "documents")
       w(docs.select(col("doc_id"),
-        graft.ops.Dedup.minhashUdf(col("text")).as("sig")), "minhash_sigs")
+        graft.functions.MinHashSig.sig(col("text")).as("sig")), "minhash_sigs")
       w(docs.select(col("doc_id"),
-        graft.ops.Dedup.simhashUdf(col("text")).as("sig")), "simhash_sigs")
+        graft.functions.SimHashSig.sig(col("text")).as("sig")), "simhash_sigs")
       w(docs.select(col("doc_id"),
         graft.ops.Dedup.ngramSetUdf(col("text"), lit(3)).as("grams")), "ngram_sets")
       w(t(spark, dir, "embeddings").select(col("vec_id"),
@@ -480,7 +480,7 @@ object SparkEntry {
         .select("id_a", "id_b").localCheckpoint()
       val init = pairs.filter(col("id_a") % 2 === 0 && col("id_b") % 2 === 0)
       val delta = pairs.filter(col("id_a") % 2 === 1 || col("id_b") % 2 === 1)
-      val committed = graft.canon.Canon.connectedComponentsAuto(init)
+      val committed = graft.canon.Canon.connectedComponents(init)
       val updated = graft.canon.IncrementalCanon.update(committed, delta)
       docs.select(col("doc_id"))
         .join(updated.select(col("id").as("doc_id"), col("canonical_id")),
@@ -2267,10 +2267,10 @@ object SparkEntry {
   /** q28's oracle: min-label connected components over the dumped synonym
     * pair fixture as `Canon.OracleRoundBudget` generated MATERIALIZED
     * label-propagation rounds (components converge in ≤ diameter rounds;
-    * CanonSuite asserts the verify corpus converges within the budget, and
-    * Canon.connectedComponents warns loudly if a corpus ever exceeds its
-    * own iteration cap). Identity fallback for singleton concepts, exactly
-    * like Canon.canonicalMap.
+    * Round3Suite asserts the verify corpus converges within the budget,
+    * and Canon.connectedComponents escalates a deeper graph to star rounds
+    * that still yield exact component minima, or throws). Identity fallback
+    * for singleton concepts, exactly like Canon.canonicalMap.
     */
   private def ccOracleSql: String = {
     val n = Canon.OracleRoundBudget

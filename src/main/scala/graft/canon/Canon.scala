@@ -1,6 +1,7 @@
 package graft.canon
 
 import graft.core.TextSpec
+import graft.observe.Observe
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -16,11 +17,13 @@ import org.apache.spark.sql.functions._
   * becomes the canonical id.
   *
   * CC is "GraphFrames-style iterative DataFrame joins with checkpointed
-  * frontiers": plain label propagation to the component minimum. Each
-  * iteration is one join + one aggregation; `localCheckpoint` every
-  * iteration truncates lineage so 20 iterations don't stack 20 plans.
-  * Convergence via `count(changed) == 0` on the driver — counts only, no
-  * per-row driver work.
+  * frontiers", behind one entry point, [[Canon.connectedComponents]]: label
+  * propagation to the component minimum for up to `MinLabelRounds` rounds
+  * (one join + one aggregation each), escalating to large-star/small-star
+  * (O(log n) rounds, capped at `StarRounds`) when the graph is deeper.
+  * `localCheckpoint` every round truncates lineage so 20 rounds don't
+  * stack 20 plans. Convergence is decided on the driver from counts only,
+  * no per-row driver work.
   */
 object Canon {
 
@@ -104,70 +107,59 @@ object Canon {
       .distinct()
   }
 
-  /** Connected components over undirected (src, dst) id pairs.
-    * Returns (id, canonical_id) for every id appearing in `pairs`.
-    *
-    * Algorithm: iterative min-label propagation. label(v) starts as v;
-    * each round every vertex takes the min of its own label and its
-    * neighbors' labels; stop when no label changed. Rounds = graph diameter
-    * (synonym clusters are shallow — a handful of rounds in practice).
-    * Frontier data is checkpointed each round (`localCheckpoint`) per the
-    * north star, bounding lineage and making stragglers restart-cheap.
+  /** Min-label rounds [[connectedComponents]] runs before it escalates to
+    * large-star/small-star. Synonym and near-dup graphs have diameter ≤ a
+    * handful, so they converge well inside this budget.
     */
+  val MinLabelRounds = 10
+
+  /** Round cap of the large-star/small-star escalation. Star converges in
+    * O(log n) rounds, so reaching the cap means the loop is broken, not
+    * slow: [[largeSmallStar]] throws rather than return labels that are
+    * not component minima.
+    */
+  val StarRounds = 50
+
   /** Round budget the q28 DuckDB oracle generates its label-propagation
-    * chain with. The operator runs to convergence (≤ `maxIterations`);
-    * CanonSuite asserts the shared verify corpus converges within THIS
-    * budget, so oracle and operator cannot silently diverge on a deeper
-    * synonym component — the oracle chain is generated from this constant.
+    * chain with. Round3Suite asserts [[minLabel]] converges on the shared
+    * verify corpus within THIS budget, so oracle and operator cannot
+    * silently diverge on a deeper synonym component — the oracle chain is
+    * generated from this constant.
     */
   val OracleRoundBudget = 15
 
-  def connectedComponents(
-      pairs: DataFrame,
-      maxIterations: Int = 50
-  )(implicit spark: SparkSession): DataFrame =
-    connectedComponentsWithStats(pairs, maxIterations)._1
-
-  /** Adaptive CC — the production default: min-label propagation (cheap
-    * rounds: one join + one agg) while the graph is shallow, escalating
-    * to large-star/small-star (O(log n) rounds, heavier each) only when
-    * min-label has not converged within `switchAfter` rounds. Synonym
-    * graphs are almost always diameter ≤ a handful — they pay the cheap
-    * path; a pathological alias chain cannot stretch the loop past
-    * switchAfter + star's logarithmic budget. Labels are component
-    * minima on BOTH paths, so downstream results are identical.
+  /** Connected components over undirected (src, dst) id pairs — the one
+    * CC entry point. Returns (id, canonical_id) for every id appearing in
+    * `pairs`, where canonical_id is the smallest id of the component.
+    *
+    * Runs [[minLabel]] (cheap rounds: one join + one aggregation) for up
+    * to `MinLabelRounds` rounds. A graph that has not converged by then (a
+    * long alias chain) escalates to [[largeSmallStar]] — O(log n) rounds,
+    * heavier each, capped at `StarRounds` — and emits one
+    * `canon.cc.escalated` event. Labels are exact component minima on
+    * both paths, so downstream results do not depend on the path taken.
     */
-  def connectedComponentsAuto(
-      pairs: DataFrame,
-      switchAfter: Int = 10,
-      maxIterations: Int = 50
-  )(implicit spark: SparkSession): DataFrame = {
-    val (labels, iters, converged) = minLabelWithStats(pairs, switchAfter, warn = false)
+  def connectedComponents(pairs: DataFrame)(implicit spark: SparkSession): DataFrame = {
+    val (labels, rounds, converged) = minLabel(pairs, MinLabelRounds)
     if (converged) labels
     else {
-      System.err.println(
-        s"[graft] connectedComponentsAuto: min-label not converged after $iters " +
-          "rounds — escalating to large-star/small-star")
-      connectedComponentsStar(pairs, maxIterations)
+      Observe.emit("canon.cc.escalated", "min_label_rounds" -> rounds)
+      largeSmallStar(pairs)._1
     }
   }
 
-  /** Like [[connectedComponents]] but also returns the number of
-    * propagation rounds actually run (the last round observes zero changes
-    * — convergence proof), so tests can assert round budgets.
+  /** Min-label propagation: label(v) starts as v; each round every vertex
+    * takes the min of its own label and its neighbors' labels; stop when
+    * no label changed or after `maxRounds` rounds. Rounds ≤ graph
+    * diameter + 1 (the last round observes zero changes — the convergence
+    * proof). Frontier data is checkpointed each round (`localCheckpoint`)
+    * per the north star, bounding lineage and making stragglers
+    * restart-cheap. Returns (labels, rounds run, converged); labels are
+    * component minima only when converged.
     */
-  def connectedComponentsWithStats(
+  private[graft] def minLabel(
       pairs: DataFrame,
-      maxIterations: Int = 50
-  )(implicit spark: SparkSession): (DataFrame, Int) = {
-    val (labels, iters, _) = minLabelWithStats(pairs, maxIterations, warn = true)
-    (labels, iters)
-  }
-
-  private def minLabelWithStats(
-      pairs: DataFrame,
-      maxIterations: Int,
-      warn: Boolean
+      maxRounds: Int
   )(implicit spark: SparkSession): (DataFrame, Int, Boolean) = {
     val srcCol = pairs.columns(0)
     val dstCol = pairs.columns(1)
@@ -196,11 +188,9 @@ object Canon {
       .withColumn("label", col("id"))
       .localCheckpoint()
 
-    val verbose = sys.env.contains("GRAFT_VERBOSE")
     var iter = 0
     var changed = 1L
-    while (changed > 0 && iter < maxIterations) {
-      val t0 = System.nanoTime()
+    while (changed > 0 && iter < maxRounds) {
       // candidate labels arriving over edges
       val incoming = edges
         .join(labels.withColumnRenamed("id", "src"), Seq("src"))
@@ -219,24 +209,16 @@ object Canon {
       changed = joined.filter(col("new_label") =!= col("label")).count()
       labels = joined.select(col("id"), col("new_label").as("label"))
       iter += 1
-      if (verbose)
-        System.err.println(
-          f"[graft] cc iter $iter: changed=$changed ${(System.nanoTime() - t0) / 1e9}%6.2f s")
     }
-    if (changed > 0 && warn)
-      System.err.println(
-        s"[graft] WARN connectedComponents hit maxIterations=$maxIterations with " +
-          s"$changed labels still changing — components larger than the round " +
-          s"budget would get split canonical ids; raise maxIterations")
     (labels.withColumnRenamed("label", "canonical_id"), iter, changed == 0L)
     }
   }
 
   /** Connected components via alternating large-star / small-star rounds
     * (Kiveris et al., "Connected Components in MapReduce and Beyond") —
-    * O(log n) rounds instead of min-label propagation's O(diameter), the
-    * scale-safe choice when alias chains can be long. Same contract as
-    * [[connectedComponents]]: (id, canonical_id = component minimum).
+    * O(log n) rounds instead of min-label propagation's O(diameter).
+    * Returns ((id, canonical_id = component minimum), rounds run); throws
+    * `IllegalStateException` if `StarRounds` rounds do not converge.
     *
     * Each round is two aggregations + two joins, no per-node neighbor
     * collection (the per-node minimum is computed with `min`, never
@@ -249,16 +231,8 @@ object Canon {
     *  - small-star(u): with edges oriented larger→smaller, every neighbor
     *    (all ≤ u) and u itself re-point to m = min(N(u) ∪ u)
     */
-  def connectedComponentsStar(
-      pairs: DataFrame,
-      maxIterations: Int = 50
-  )(implicit spark: SparkSession): DataFrame =
-    connectedComponentsStarWithStats(pairs, maxIterations)._1
-
-  def connectedComponentsStarWithStats(
-      pairs: DataFrame,
-      maxIterations: Int = 50
-  )(implicit spark: SparkSession): (DataFrame, Int) = {
+  private[graft] def largeSmallStar(pairs: DataFrame)(
+      implicit spark: SparkSession): (DataFrame, Int) = {
     val srcCol = pairs.columns(0)
     val dstCol = pairs.columns(1)
     val allNodes = pairs.select(col(srcCol).as("id"))
@@ -298,17 +272,16 @@ object Canon {
     var iter = 0
     var prev = (-1L, 0L)
     var cur = fingerprint(edges)
-    while (cur != prev && iter < maxIterations) {
+    while (cur != prev && iter < StarRounds) {
       edges = smallStar(largeStar(edges)).localCheckpoint()
       prev = cur
       cur = fingerprint(edges)
       iter += 1
     }
     if (cur != prev)
-      System.err.println(
-        s"[graft] WARN connectedComponentsStar hit maxIterations=$maxIterations " +
-          "without the edge fingerprint stabilizing — labels from a non-star edge " +
-          "set are NOT component minima; raise maxIterations")
+      throw new IllegalStateException(
+        s"large-star/small-star did not converge in $StarRounds rounds; labels " +
+          "from a non-star edge set are not component minima")
     // converged star graph: every non-root points at its component minimum
     val labels = allNodes
       .join(edges.withColumnRenamed("a", "id"), Seq("id"), "left")
@@ -318,10 +291,6 @@ object Canon {
     }
   }
 
-  /** Full canonicalization: synonym edges (alias + abbreviation +
-    * name-similarity) → CC → (id, canonical_id) map covering ALL concepts
-    * (identity for singletons).
-    */
   /** All synonym edge families as one deduped (id_a, id_b) pair set —
     * exposed separately so the verify harness can dump it as the CC
     * oracle's input fixture.
@@ -347,16 +316,16 @@ object Canon {
       .distinct()
   }
 
+  /** Full canonicalization: synonym edges (alias + abbreviation +
+    * name-similarity) → CC → (id, canonical_id) map covering ALL concepts
+    * (identity for singletons).
+    */
   def canonicalMap(
       concepts: DataFrame,
       aliasPairs: DataFrame,
       nameSimThreshold: Double = 0.6
   )(implicit spark: SparkSession): DataFrame = {
-    // adaptive CC: cheap min-label rounds for the (typical) shallow
-    // synonym graph, star escalation only when min-label fails to
-    // converge within its budget. Labels are component minima on both
-    // paths — the q28 oracle and the equivalence property pin that.
-    val cc = connectedComponentsAuto(synonymEdges(concepts, aliasPairs, nameSimThreshold))
+    val cc = connectedComponents(synonymEdges(concepts, aliasPairs, nameSimThreshold))
     concepts
       .select(col("id"))
       .join(cc, Seq("id"), "left")

@@ -10,9 +10,10 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Native Catalyst expression for the 32-hash MinHash signature — the
-  * codegen'd replacement for the Scala-UDF version (`ops/Dedup.minhashUdf`
-  * keeps delegating to the same [[MinHashSig.compute]] kernel, so the two
-  * paths cannot diverge and committed signature fixtures stay valid).
+  * engine's only MinHash surface. The kernel lives once in the companion
+  * ([[MinHashSig.compute]]); the interpreted `eval` and the generated code
+  * both call it, so the two paths cannot diverge and committed signature
+  * fixtures stay valid.
   *
   * Why an `Expression` and not a UDF (the preference order the build
   * follows: builtin > native expression > UDF): a Scala UDF pays
@@ -23,10 +24,11 @@ import org.apache.spark.unsafe.types.UTF8String
   * `UTF8String`) and writes its result directly as `GenericArrayData` —
   * on the 100-TB dedup path the signature scan is the dominant CPU
   * stage, so the per-row overhead is the throughput (PlanQualitySuite
-  * pins the UDF-free plan; Round4Suite pins value-equality vs the UDF).
+  * pins the UDF-free plan; Round4Suite pins value-equality vs the
+  * driver-side kernel).
   *
-  * Null contract matches the UDF exactly: a NULL document yields the
-  * all-MaxValue sentinel signature, never NULL (downstream banding
+  * Null contract: a NULL document yields the all-MaxValue sentinel
+  * signature ([[MinHashSig.nullSig]]), never NULL (downstream banding
   * expressions index `sig` unconditionally).
   */
 case class MinHashSig(child: Expression) extends UnaryExpression {
@@ -80,8 +82,8 @@ object MinHashSig {
     */
   def nullSig(): Array[Long] = Array.fill(NumHashes)(Long.MaxValue)
 
-  /** Word 3-shingles → 32 minhashes. THE single kernel: the UDF path and
-    * the codegen path both call this, byte-for-byte.
+  /** Word 3-shingles → 32 minhashes. THE single kernel: the interpreted
+    * and the codegen path both call this, byte-for-byte.
     */
   def compute(text: String): Array[Long] = {
     val words = text.toLowerCase(java.util.Locale.ROOT).split("\\s+")

@@ -9,10 +9,10 @@ import org.apache.spark.sql.types.{DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Native Catalyst expression for the 64-bit SimHash — same pattern as
-  * [[MinHashSig]]: the kernel lives once in the companion, the retained
-  * UDF (`ops/Dedup.simhashUdf`) delegates to it, and `doGenCode` keeps
-  * the hot scan inside whole-stage codegen with a primitive long result
-  * (no boxing at all on this one). NULL text yields 0L, matching the UDF.
+  * [[MinHashSig]]: the kernel lives once in the companion, the interpreted
+  * `eval` calls it, and `doGenCode` keeps the hot scan inside whole-stage
+  * codegen with a primitive long result (no boxing at all on this one).
+  * NULL text yields 0L.
   */
 case class SimHashSig(child: Expression) extends UnaryExpression {
 
@@ -53,7 +53,7 @@ case class SimHashSig(child: Expression) extends UnaryExpression {
 object SimHashSig {
 
 
-  /** Per-word sign-vote SimHash — THE single kernel for UDF and codegen. */
+  /** Per-word sign-vote SimHash — THE single kernel for eval and codegen. */
   def compute(text: String): Long = {
     val counts = new Array[Int](64)
     for (w <- text.toLowerCase(java.util.Locale.ROOT).split("\\s+") if w.nonEmpty) {

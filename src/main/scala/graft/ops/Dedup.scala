@@ -71,16 +71,6 @@ object Dedup {
     x.zip(y).count { case (u, v) => u == v }.toDouble / NumHashes
   }
 
-  /** UDF form of the minhash kernel — kept for API compatibility; it
-    * delegates to the SAME [[graft.functions.MinHashSig.compute]] kernel
-    * as the codegen'd native expression, so the two paths cannot diverge.
-    * New code should use [[graft.functions.MinHashSig.sig]] (UDF-free).
-    */
-  val minhashUdf = udf { (text: String) =>
-    if (text == null) graft.functions.MinHashSig.nullSig()
-    else graft.functions.MinHashSig.compute(text)
-  }
-
   /** LSH candidate pairs: docs sharing ANY band of minhash values.
     * Output: (id_a, id_b) with id_a < id_b, plus the estimated Jaccard
     * from signature agreement.
@@ -144,14 +134,6 @@ object Dedup {
   }
 
   // --- SimHash -------------------------------------------------------
-
-  /** UDF form of the simhash kernel — kept for API compatibility;
-    * delegates to the same [[graft.functions.SimHashSig.compute]] kernel
-    * as the codegen'd native expression (see the MinHash note above).
-    */
-  val simhashUdf = udf { (text: String) =>
-    if (text == null) 0L else graft.functions.SimHashSig.compute(text)
-  }
 
   /** SimHash near-dup pairs: bucket by each of 4 16-bit chunks (docs within
     * Hamming distance ≤ 3 of each other share at least one chunk when bits
@@ -300,8 +282,8 @@ object Dedup {
     * (A~B, B~C ⇒ {A,B,C} is one cluster even if A and C never met in a
     * band). Composes minhash banding with the engine's connected
     * components (`Canon.connectedComponents` — iterative min-label joins
-    * with checkpointed frontiers, the same scale path the KG
-    * canonicalizer uses).
+    * with checkpointed frontiers, escalating to large-star/small-star on a
+    * deep graph; the same entry point the KG canonicalizer uses).
     *
     * Giant-family correctness: buckets over `bucketCap` must NOT go
     * through the |bucket|² verified self-join, but for CLUSTERING they

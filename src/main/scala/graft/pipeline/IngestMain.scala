@@ -31,7 +31,7 @@ object IngestMain {
       .config("spark.sql.adaptive.skewJoin.enabled", "true")
       // ICU case-mapping class init costs ~60s in this sandbox and blocks
       // every task at the first lower()/upper(); our spec is ASCII-stable
-      // under JVM mappings, so skip ICU (see graft.pipeline.DebugPerf).
+      // under JVM mappings, so skip ICU.
       .config("spark.sql.icu.caseMappings.enabled", "false")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")

@@ -38,20 +38,31 @@ class CanonSuite extends SparkFunSuite {
         (f"n${rng.nextInt(n)}%02d", f"n${rng.nextInt(n)}%02d")
       }.filter { case (a, b) => a != b }
       val df = pairs.toDF("id_a", "id_b")
-      val minLabel = Canon.connectedComponents(df).as[(String, String)].collect().toMap
-      val star = Canon.connectedComponentsStar(df).as[(String, String)].collect().toMap
+      // a graph on n nodes has diameter < n: n rounds always converge
+      val (mlLabels, _, converged) = Canon.minLabel(df, maxRounds = n)
+      assert(converged)
+      val minLabel = mlLabels.as[(String, String)].collect().toMap
+      val star = Canon.largeSmallStar(df)._1.as[(String, String)].collect().toMap
       assert(star == minLabel, s"divergence on pairs $pairs")
     }
   }
 
   test("star CC converges in O(log n) rounds where min-label needs O(diameter)") {
     val chain = (0 until 64).map(i => (f"n$i%02d", f"n${i + 1}%02d")).toDF("a", "b")
-    val (labels, starRounds) = Canon.connectedComponentsStarWithStats(chain, maxIterations = 100)
+    val (labels, starRounds) = Canon.largeSmallStar(chain)
     assert(labels.select("canonical_id").distinct().as[String].collect().toSeq == Seq("n00"))
-    val (_, mlRounds) = Canon.connectedComponentsWithStats(chain, maxIterations = 100)
+    val (_, mlRounds, mlConverged) = Canon.minLabel(chain, maxRounds = 100)
+    assert(mlConverged)
     assert(starRounds <= 12, s"star took $starRounds rounds")
     assert(mlRounds > starRounds,
       s"expected min-label ($mlRounds) to need more rounds than star ($starRounds)")
+  }
+
+  test("connectedComponents: a 120-node path graph gets the single label n000") {
+    val path = (0 until 119).map(i => (f"n$i%03d", f"n${i + 1}%03d")).toDF("id_a", "id_b")
+    val cc = Canon.connectedComponents(path).as[(String, String)].collect().toMap
+    assert(cc.size == 120)
+    assert(cc.count(_._2 != "n000") == 0, s"split component: n119 -> ${cc("n119")}")
   }
 
   test("abbreviationPairs: initials of multiword names match short ALL-CAPS names") {

@@ -302,11 +302,11 @@ class Round3Suite extends SparkFunSuite {
     val shared = SparkEntry.kg(spark)
     val pairs = Canon.synonymEdges(shared.concepts,
       graft.pipeline.Ingest.aliasesOf(shared.ex), 0.75)
-    val (_, iters) = Canon.connectedComponentsWithStats(pairs)
+    val (_, _, converged) = Canon.minLabel(pairs, Canon.OracleRoundBudget)
     // the oracle chain runs exactly OracleRoundBudget propagation rounds;
-    // the operator must converge within it (last round observes 0 changes)
-    assert(iters <= Canon.OracleRoundBudget,
-      s"CC needed $iters rounds > oracle budget ${Canon.OracleRoundBudget} — " +
+    // min-label must converge within it (last round observes 0 changes)
+    assert(converged,
+      s"min-label did not converge within the oracle budget ${Canon.OracleRoundBudget} — " +
         "q28 would diverge from its oracle; raise Canon.OracleRoundBudget")
   }
 }

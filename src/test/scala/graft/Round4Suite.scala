@@ -190,17 +190,28 @@ class Round4Suite extends SparkFunSuite {
 
   // ---- canonicalMap through star CC --------------------------------------
 
-  test("connectedComponentsAuto: shallow graph stays on min-label; deep chain escalates to star") {
-    // path graph a00-a01-...-a19: diameter 19 > switchAfter=3 → escalation
-    val chain = (0 until 19).map(i => (f"a$i%02d", f"a${i + 1}%02d")).toDF("id_a", "id_b")
-    val got = Canon.connectedComponentsAuto(chain, switchAfter = 3)
-      .collect().map(r => r.getString(0) -> r.getString(1)).toMap
-    assert(got.size == 20 && got.values.forall(_ == "a00"))
-    // shallow star-shaped graph converges inside the min-label budget
-    val shallow = (1 until 6).map(i => ("hub", s"s$i")).toDF("id_a", "id_b")
-    val got2 = Canon.connectedComponentsAuto(shallow, switchAfter = 10)
-      .collect().map(r => r.getString(1)).toSet
-    assert(got2 == Set("hub"))
+  test("connectedComponents: shallow graph stays on min-label; deep chain escalates") {
+    import graft.observe.Observe
+    val sink = new Observe.InMemorySink()
+    Observe.configure(sink)
+    try {
+      // path graph a00-a01-...-a19: diameter 19 > MinLabelRounds → escalation
+      val chain = (0 until 19).map(i => (f"a$i%02d", f"a${i + 1}%02d")).toDF("id_a", "id_b")
+      assert(!Canon.minLabel(chain, Canon.MinLabelRounds)._3)
+      val got = Canon.connectedComponents(chain)
+        .collect().map(r => r.getString(0) -> r.getString(1)).toMap
+      assert(got.size == 20 && got.values.forall(_ == "a00"))
+      assert(sink.ofType("canon.cc.escalated").map(_.fields("min_label_rounds")) ==
+        Seq(Canon.MinLabelRounds))
+      // shallow star-shaped graph converges inside the min-label budget
+      sink.clear()
+      val shallow = (1 until 6).map(i => ("hub", s"s$i")).toDF("id_a", "id_b")
+      assert(Canon.minLabel(shallow, Canon.MinLabelRounds)._3)
+      val got2 = Canon.connectedComponents(shallow)
+        .collect().map(r => r.getString(1)).toSet
+      assert(got2 == Set("hub"))
+      assert(sink.ofType("canon.cc.escalated").isEmpty)
+    } finally Observe.reset()
   }
 
   test("canonicalMap labels are component minima through the star-CC path") {
@@ -273,10 +284,10 @@ class Round4Suite extends SparkFunSuite {
       }.filter { case (a, b) => a != b }.distinct
       val (b1, b2) = edges.partition(_ => rnd.nextBoolean())
       val all = edges.toDF("id_a", "id_b")
-      val global = Canon.connectedComponentsAuto(all)
+      val global = Canon.connectedComponents(all)
         .as[(Long, Long)].collect().toMap
 
-      val committed = Canon.connectedComponentsAuto(b1.toDF("id_a", "id_b"))
+      val committed = Canon.connectedComponents(b1.toDF("id_a", "id_b"))
       val (inc, relabel) = IncrementalCanon.updateWithRelabel(
         committed, b2.toDF("id_a", "id_b"))
       val got = inc.as[(Long, Long)].collect()
@@ -292,7 +303,7 @@ class Round4Suite extends SparkFunSuite {
     import graft.canon.{Canon, IncrementalCanon}
     // committed: {1,2} and {5,6}; batch bridges them via NEW node 9 and
     // adds a disjoint new pair {20,21}
-    val committed = Canon.connectedComponentsAuto(
+    val committed = Canon.connectedComponents(
       Seq((1L, 2L), (5L, 6L)).toDF("id_a", "id_b"))
     val updated = IncrementalCanon.update(committed,
       Seq((2L, 9L), (9L, 6L), (20L, 21L)).toDF("id_a", "id_b"))
@@ -303,8 +314,8 @@ class Round4Suite extends SparkFunSuite {
 
   // ---- native minhash expression ------------------------------------------
 
-  test("MinHashSig expression == minhashUdf on nulls, empties, and real text") {
-    import graft.ops.Dedup
+  test("MinHashSig expression == driver kernel on nulls, empties, and real text") {
+    import graft.functions.MinHashSig
     val docs = Seq(
       (1L, "the quick brown fox jumps over the lazy dog"),
       (2L, ""), (3L, null.asInstanceOf[String]), (4L, "one two"),
@@ -315,12 +326,13 @@ class Round4Suite extends SparkFunSuite {
     val viaExpr =
       try {
         spark.conf.set("spark.sql.codegen.fallback", "false")
-        docs.select($"doc_id", graft.functions.MinHashSig.sig($"text").as("sig"))
+        docs.select($"doc_id", MinHashSig.sig($"text").as("sig"))
           .as[(Long, Seq[Long])].collect().toMap
       } finally spark.conf.set("spark.sql.codegen.fallback", "true")
-    val viaUdf = docs.select($"doc_id", Dedup.minhashUdf($"text").as("sig"))
-      .as[(Long, Seq[Long])].collect().toMap
-    assert(viaExpr == viaUdf)
+    val viaKernel = docs.as[(Long, String)].collect().map { case (id, text) =>
+      id -> (if (text == null) MinHashSig.nullSig() else MinHashSig.compute(text)).toSeq
+    }.toMap
+    assert(viaExpr == viaKernel)
     // null + too-short docs yield the MaxValue sentinel, never null
     assert(viaExpr(3L).forall(_ == Long.MaxValue))
     assert(viaExpr(4L).forall(_ == Long.MaxValue))
@@ -328,7 +340,7 @@ class Round4Suite extends SparkFunSuite {
     val row = org.apache.spark.sql.catalyst.InternalRow(
       org.apache.spark.unsafe.types.UTF8String.fromString(
         "the quick brown fox jumps over the lazy dog"))
-    val e = graft.functions.MinHashSig(
+    val e = MinHashSig(
       org.apache.spark.sql.catalyst.expressions.BoundReference(0,
         org.apache.spark.sql.types.StringType, nullable = true))
     val interp = e.eval(row)
@@ -336,8 +348,8 @@ class Round4Suite extends SparkFunSuite {
     assert(interp == viaExpr(1L))
   }
 
-  test("SimHashSig expression == simhashUdf, codegen fallback forbidden") {
-    import graft.ops.Dedup
+  test("SimHashSig expression == driver kernel, codegen fallback forbidden") {
+    import graft.functions.SimHashSig
     val docs = Seq(
       (1L, "the quick brown fox"), (2L, ""), (3L, null.asInstanceOf[String]),
       (4L, "Mixed CASE words repeat words")
@@ -345,12 +357,13 @@ class Round4Suite extends SparkFunSuite {
     val viaExpr =
       try {
         spark.conf.set("spark.sql.codegen.fallback", "false")
-        docs.select($"doc_id", graft.functions.SimHashSig.sig($"text").as("sig"))
+        docs.select($"doc_id", SimHashSig.sig($"text").as("sig"))
           .as[(Long, Long)].collect().toMap
       } finally spark.conf.set("spark.sql.codegen.fallback", "true")
-    val viaUdf = docs.select($"doc_id", Dedup.simhashUdf($"text").as("sig"))
-      .as[(Long, Long)].collect().toMap
-    assert(viaExpr == viaUdf)
+    val viaKernel = docs.as[(Long, String)].collect().map { case (id, text) =>
+      id -> (if (text == null) 0L else SimHashSig.compute(text))
+    }.toMap
+    assert(viaExpr == viaKernel)
     assert(viaExpr(3L) == 0L)
   }
 
